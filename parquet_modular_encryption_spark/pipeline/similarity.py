@@ -243,7 +243,7 @@ def _cell_score_batches(cells, ces, cell_arrow, it, max_out_rows=None):
         nbs = np.sqrt(nb)
     else:
         nbs = np.zeros(K)
-    cells_np = list(cells)
+    cells_np = np.asarray(cells)
     for batch in it:
         n = batch.num_rows
         if n == 0 or not K:
@@ -280,14 +280,7 @@ def _cell_score_batches(cells, ces, cell_arrow, it, max_out_rows=None):
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(np.tile(vid, c), type=pa.int64()),
-                        pa.array(
-                            [
-                                v
-                                for k in range(k0, k0 + c)
-                                for v in [cells_np[k]] * n
-                            ],
-                            type=cell_arrow,
-                        ),
+                        pa.array(np.repeat(cells_np[k0 : k0 + c], n), type=cell_arrow),
                         pa.array(
                             cos_flat,
                             type=pa.float64(),

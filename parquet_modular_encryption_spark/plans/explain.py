@@ -188,18 +188,21 @@ def worst_straggler(
 
 
 def cumulative_shuffle_bytes(spark) -> tuple[int, int]:
-    """(shuffle_write_bytes, shuffle_read_bytes) summed over every stage
-    the app status store retains — snapshot before/after a query and the
-    delta is that query's total shuffle volume.
+    """(shuffle_write_bytes, shuffle_read_bytes) over the application's
+    lifetime — snapshot before/after a query and the delta is that
+    query's total shuffle volume.
 
-    Reads the JVM AppStatusStore directly (the same source as the UI's
-    stage table), so it measures REAL shuffle bytes, not plan-shape
-    proxies. Callers that diff snapshots across many queries should
-    raise ``spark.ui.retainedStages`` so eviction between snapshots
-    cannot shrink the cumulative sums (the scale experiment sets 20000).
+    Reads the JVM AppStatusStore directly (the executor totals the UI's
+    executor table shows), so it measures REAL shuffle bytes, not
+    plan-shape proxies. Executor totals are not evicted the way stage
+    rows past ``spark.ui.retainedStages`` are, so the sums cannot shrink
+    between two snapshots however many stages run in between (only dead
+    executors past ``spark.ui.retainedDeadExecutors`` drop out).
     """
     written = read = 0
-    for st in _stage_list(spark):
-        written += st.shuffleWriteBytes()
-        read += st.shuffleReadBytes()
+    it = spark.sparkContext._jsc.sc().statusStore().executorList(False).iterator()
+    while it.hasNext():
+        ex = it.next()
+        written += ex.totalShuffleWrite()
+        read += ex.totalShuffleRead()
     return written, read

@@ -9,10 +9,12 @@ read_encrypted_parquet.py) as distributed Spark operators:
   round-trip per file × key-id), internal key material, PUBLIC-signed
   plaintext footer, zstd compression
   (write_encrypted_parquet.py:67-87,23-25).
-- ``read_encrypted``: schema comes from the plaintext footer with NO key
-  (the reference's "partial protection" mode, README.md:49-54), then each
-  executor task decrypts its share of files with a per-task KMS client and
-  60 s unwrapped-key cache (read_encrypted_parquet.py:28-39,36). Projection
+- ``read_encrypted``: one scan over one or more directories. Schema comes
+  from the plaintext footer with NO key (the reference's "partial
+  protection" mode, README.md:49-54); the sorted file list is handed to
+  tasks by id — no shuffle — and each task decrypts its files with a
+  per-task KMS client and 60 s unwrapped-key cache
+  (read_encrypted_parquet.py:28-39,36). Projection
   is pushed into the Arrow scanner, so unread encrypted columns are never
   decrypted — the reference's least-privilege projection
   (read_encrypted_parquet.py:43). Key-fetch caveat (pinned at the KMS wire
@@ -205,19 +207,24 @@ def write_encrypted(
 
 def read_encrypted(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     token: str | None = None,
     columns: list[str] | None = None,
     kms_url: str | None = None,
 ) -> DataFrame:
-    """Distributed decrypting scan: schema from the plaintext footer (no
-    key needed), file-granular parallel decryption on executors, projection
-    pushed into the Arrow scanner. Encrypted-footer files (PARE magic) fall
-    back to a driver-side decrypting schema read — one KMS unwrap of the
-    footer key, still no data scanned."""
+    """Distributed decrypting scan over one directory or a list of them:
+    every ``.parquet`` file is listed once, sorted, and handed to tasks by
+    id (``spark.range`` partitions, file list in the closure) — one scan,
+    no shuffle. Schema comes from the first file's plaintext footer (no
+    key needed); each file is projected by name onto it, so column order
+    may differ between files. Projection is pushed into the Arrow scanner.
+    Encrypted-footer files (PARE magic) fall back to a driver-side
+    decrypting schema read — one KMS unwrap of the footer key, still no
+    data scanned. Raises ``FileNotFoundError`` only when no file exists."""
     kms_url = _resolve_kms_url(spark, kms_url)
+    dirs = [path] if isinstance(path, str) else list(path)
     files = sorted(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+        os.path.join(d, f) for d in dirs for f in os.listdir(d) if f.endswith(".parquet")
     )
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
@@ -234,8 +241,6 @@ def read_encrypted(
         arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
     spark_schema = _spark_schema_from_arrow(spark, arrow_schema)
 
-    cols = list(columns) if columns else None
-
     def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         decryption = pads.ParquetDecryptionConfig(
             _crypto_factory_for_tasks(),
@@ -248,17 +253,15 @@ def read_encrypted(
             )
         )
         for batch in batches:
-            for fname in batch.column("file").to_pylist():
-                dataset = pads.dataset(fname, format=fmt)
-                scanner = dataset.scanner(columns=cols)
+            for i in batch.column("id").to_pylist():
+                dataset = pads.dataset(files[i], format=fmt)
+                scanner = dataset.scanner(columns=arrow_schema.names)
                 for rb in scanner.to_batches():
                     if rb.num_rows:
                         yield rb.cast(arrow_schema)
 
-    file_df = spark.createDataFrame([(f,) for f in files], "file string").repartition(
-        min(len(files), 64)
-    )
-    return file_df.mapInArrow(read_files, spark_schema)
+    ids = spark.range(0, len(files), 1, numPartitions=min(len(files), 64))
+    return ids.mapInArrow(read_files, spark_schema)
 
 
 def _crypto_factory_for_tasks():

@@ -212,22 +212,14 @@ def read_encrypted_batches(
     kms_url: str | None = None,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Decrypting union over every ``batch_id=N`` directory written by
-    :func:`encrypted_stream_ingest`. The directory list is driver-side but
-    bounded by micro-batch count (not data volume); each directory's scan
-    is the fully distributed ``read_encrypted``."""
-    from functools import reduce
-
+    """One decrypting scan over every ``batch_id=N`` directory written by
+    :func:`encrypted_stream_ingest` — a single shuffle-free
+    ``read_encrypted`` over all of them. A batch directory without files
+    (a zero-row arrival) is allowed; ``FileNotFoundError`` only when no
+    batch wrote any file."""
     from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
 
     subs = sorted(
-        d for d in os.listdir(out_dir) if d.startswith("batch_id=")
+        os.path.join(out_dir, d) for d in os.listdir(out_dir) if d.startswith("batch_id=")
     )
-    if not subs:
-        raise FileNotFoundError(f"no batch_id=* directories under {out_dir}")
-    frames = [
-        read_encrypted(spark, f"{out_dir}/{d}", token=token, kms_url=kms_url,
-                       columns=columns)
-        for d in subs
-    ]
-    return reduce(DataFrame.unionByName, frames)
+    return read_encrypted(spark, subs, token=token, kms_url=kms_url, columns=columns)

@@ -341,28 +341,22 @@ def read_encrypted_stream_output(
     kms_url: str,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Decrypting read over every batch directory the encrypted streaming
-    sink produced (token-gated column access per crypto/policy.py).
-    ``columns`` prunes the projection at scan construction — the
-    least-privilege pattern: a low-privilege token reads the plaintext
-    columns it is entitled to by never materializing the encrypted ones."""
+    """One decrypting scan over every batch directory the encrypted
+    streaming sink produced (token-gated column access per
+    crypto/policy.py) — a single shuffle-free ``read_encrypted`` over all
+    of them; empty batch directories are allowed, and ``FileNotFoundError``
+    is raised only when no batch wrote any file. ``columns`` prunes the
+    projection at scan construction — the least-privilege pattern: a
+    low-privilege token reads the plaintext columns it is entitled to by
+    never materializing the encrypted ones."""
     import os
 
     from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
 
     batches = sorted(
-        d for d in os.listdir(out_dir) if d.startswith("batch_id=")
+        os.path.join(out_dir, d) for d in os.listdir(out_dir) if d.startswith("batch_id=")
     )
-    parts = [
-        read_encrypted(
-            spark, f"{out_dir}/{d}", token=token, kms_url=kms_url, columns=columns
-        )
-        for d in batches
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return read_encrypted(spark, batches, token=token, kms_url=kms_url, columns=columns)
 
 
 def ohlc_bars_stream(

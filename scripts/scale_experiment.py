@@ -408,8 +408,8 @@ def main() -> int:
         extra_conf = native_session_conf()
     except Exception as exc:  # noqa: BLE001
         print(f"# native PME jar unavailable: {exc}", file=sys.stderr)
-    # high stage retention so cumulative_shuffle_bytes snapshots never
-    # shrink from eviction between the before/after reads of one query
+    # high stage retention so the stage_task_dispersion snapshots of one
+    # query still find its stages after many queries
     extra_conf["spark.ui.retainedStages"] = "20000"
     # zstd shuffle compression (the sf10 lesson): a long-lived session
     # retains every query's shuffle files until exit, and on this VM the

@@ -560,3 +560,83 @@ def test_kms_call_counts_bounded_by_files_and_keys(spark, tmp_path):
         assert max(unwraps_per_read) <= unwraps_per_read[0], unwraps_per_read
     finally:
         srv.stop()
+
+
+@pytest.fixture(scope="module")
+def customer_batches(spark, sf_dir, tmp_path_factory):
+    """Three batch directories of two encrypted files each (customer rows
+    split by c_custkey % 3) on a private KMS, so tests can count its
+    wire-level unwraps."""
+    from pyspark.sql import functions as F
+
+    from parquet_modular_encryption_spark.crypto.kms_server import KmsServer
+
+    root = tmp_path_factory.mktemp("cust_batches")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    srv = KmsServer().start()
+    dirs = []
+    for b in range(3):
+        d = str(root / f"batch_id={b}")
+        part = cust.filter(F.col("c_custkey") % 3 == b).repartition(2)
+        assert write_encrypted(part, d, CUSTOMER_POLICY, kms_url=srv.url) == 2
+        dirs.append(d)
+    yield srv, dirs, sorted(map(tuple, cust.collect()))
+    srv.stop()
+
+
+def test_multi_directory_read_is_one_shuffle_free_scan(spark, customer_batches):
+    """A read over several directories is ONE scan: files are handed to
+    tasks by id, so the executed plan has no Exchange, there is one task
+    per file (up to 64), and every row comes back exactly once."""
+    from parquet_modular_encryption_spark.plans.explain import executed_plan
+
+    srv, dirs, want = customer_batches
+    df = read_encrypted(spark, dirs, token="RESTRICTED", kms_url=srv.url)
+    assert sorted(map(tuple, df.collect())) == want
+    plan = executed_plan(df)
+    assert "Exchange" not in plan, plan
+    assert df.rdd.getNumPartitions() == 6
+
+
+def test_multi_directory_read_unwraps_like_separate_reads(spark, customer_batches):
+    """One read over N directories makes exactly the KMS unwraps of N
+    separate reads (one per file x key-id), counted at the KMS wire."""
+    srv, dirs, _ = customer_batches
+    srv.reset_counters()
+    read_encrypted(spark, dirs, token="RESTRICTED", kms_url=srv.url).collect()
+    one_scan = srv.counters["unwrap"]
+    srv.reset_counters()
+    for d in dirs:
+        read_encrypted(spark, d, token="RESTRICTED", kms_url=srv.url).collect()
+    assert one_scan == srv.counters["unwrap"] > 0
+
+
+def test_multi_directory_read_fails_closed(spark, customer_batches):
+    """A PUBLIC token projecting the CONFIDENTIAL column over several
+    directories is denied; its plaintext columns stay readable."""
+    srv, dirs, want = customer_batches
+    with pytest.raises(Exception, match="(?i)unwrap|denied|authoriz|403"):
+        read_encrypted(
+            spark, dirs, token="PUBLIC", columns=["c_custkey", "c_acctbal"],
+            kms_url=srv.url,
+        ).collect()
+    keys = read_encrypted(
+        spark, dirs, token="PUBLIC", columns=["c_custkey"], kms_url=srv.url
+    ).collect()
+    assert sorted(r.c_custkey for r in keys) == [r[0] for r in want]
+
+
+def test_multi_directory_read_projects_by_name(spark, sf_dir, tmp_path):
+    """Files whose columns are stored in a different order read back
+    row-exact in the first file's column order."""
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    write_encrypted(cust.filter("c_custkey <= 75"), a, CUSTOMER_POLICY)
+    write_encrypted(
+        cust.filter("c_custkey > 75").select(*reversed(cust.columns)), b, CUSTOMER_POLICY
+    )
+    back = read_encrypted(spark, [a, b], token="RESTRICTED")
+    assert back.columns == cust.columns
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, cust.collect()))
+    with pytest.raises(FileNotFoundError):
+        read_encrypted(spark, [], token="RESTRICTED")

@@ -780,3 +780,50 @@ def test_encrypted_stream_ingest_crash_replay(spark, tmp_path):
     )
     want = sorted(tuple(r.values()) for r in table.to_pylist())
     assert got == want
+
+
+def test_encrypted_stream_ingest_empty_arrival(spark, tmp_path):
+    """A zero-row arrival between non-empty ones leaves an empty
+    ``batch_id=N`` directory (the micro-batch writes no file); the
+    read-back skips it and still equals the source row-exact. With no
+    file in any batch directory, both read-backs raise FileNotFoundError."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from parquet_modular_encryption_spark.crypto.policy import DOCUMENTS_POLICY
+    from parquet_modular_encryption_spark.streaming.ingest import (
+        encrypted_stream_ingest,
+        read_encrypted_batches,
+    )
+    from parquet_modular_encryption_spark.streaming.windows import (
+        read_encrypted_stream_output,
+    )
+
+    src = tmp_path / "arrivals"
+    os.makedirs(src)
+    table = pq.read_table(f"{SF}/documents.parquet")
+    half = len(table) // 2
+    parts = [table.slice(0, half), table.slice(0, 0), table.slice(half)]
+    for i, part in enumerate(parts):
+        pq.write_table(part, src / f"{i:03d}.parquet")
+        os.utime(src / f"{i:03d}.parquet", (time.time() - 300 + i,) * 2)
+
+    out = str(tmp_path / "enc_corpus")
+    encrypted_stream_ingest(spark, str(src), out, DOCUMENTS_POLICY)
+    assert os.listdir(f"{out}/batch_id=1") == []
+    got = sorted(
+        tuple(r)
+        for r in read_encrypted_batches(spark, out, token="RESTRICTED").collect()
+    )
+    assert got == sorted(tuple(r.values()) for r in table.to_pylist())
+
+    empty = tmp_path / "empty_lake"
+    os.makedirs(empty / "batch_id=0")
+    with pytest.raises(FileNotFoundError):
+        read_encrypted_batches(spark, str(empty), token="RESTRICTED")
+    bare = tmp_path / "no_batches"
+    os.makedirs(bare)
+    with pytest.raises(FileNotFoundError):
+        read_encrypted_stream_output(spark, str(bare), "RESTRICTED", None)
