@@ -292,6 +292,40 @@ def test_connected_components_two_jobs_per_iteration(spark):
     )
 
 
+def test_two_phase_cc_two_jobs_per_round(spark):
+    """Each large-star/small-star round is one eager checkpoint of the
+    next adjacency plus one shuffle-free star-forest probe of it — no
+    mid-round checkpoint, no set-difference probe, and no extra round
+    that only confirms nothing changed."""
+    from parquet_modular_encryption_spark.pipeline.dedup import (
+        two_phase_connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)], "doc_a bigint, doc_b bigint"
+    )
+    sc = spark.sparkContext
+    # AQE off for the same reason as the label-propagation count above:
+    # with it on, every query stage is its own job.
+    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("cc2-jobs", "two-phase connected components job count")
+    try:
+        stats: dict = {}
+        labels = two_phase_connected_components(pairs, stats=stats)
+        got = {(r.node, r.component) for r in labels.collect()}
+    finally:
+        sc.setJobGroup("", "")
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+    assert got == {(n, 0) for n in range(5)} | {(10, 10), (11, 10)}
+    jobs = sc.statusTracker().getJobIdsForGroup("cc2-jobs")
+    rounds = stats["rounds"]
+    assert rounds == 2
+    # 2 jobs per round + the initial adjacency checkpoint and its probe
+    # + the final collect
+    assert len(jobs) <= 2 * rounds + 3, f"{len(jobs)} jobs for {rounds} rounds"
+
+
 def test_pagerank_matches_exact_integer_reference(spark):
     """q57b core against a pure-Python integer PageRank with the same
     fixed-point arithmetic: since every operation is exact BIGINT math
@@ -2011,8 +2045,10 @@ def _union_find_components(edges):
 def test_two_phase_cc_matches_union_find_on_adversarial_graphs(spark):
     """large-star/small-star vs a driver-side union-find ground truth on:
     a long path (diameter >> log n — the case the algorithm exists for),
-    disjoint cliques, a star, and a seeded random graph. Must converge in
-    far fewer rounds than the path's diameter. Label propagation, whose
+    disjoint cliques, a star, a seeded random graph, an empty pair frame,
+    a 10k-leaf hub and ten seeded sparse random graphs. Must converge in
+    far fewer rounds than the path's diameter, and take no round at all
+    on a graph that is already a star forest. Label propagation, whose
     round budget is O(diameter), must refuse the path graph loudly
     instead of returning capped (wrong) labels."""
     import random
@@ -2041,13 +2077,38 @@ def test_two_phase_cc_matches_union_find_on_adversarial_graphs(spark):
     rand = [(rng.randrange(400, 450), rng.randrange(400, 450)) for _ in range(60)]
     rand = [(a, b) for a, b in rand if a != b]
 
-    for edges in (path, cliques, star, rand, path + cliques + star + rand):
+    rounds = {}
+    graphs = {
+        "path": path,
+        "cliques": cliques,
+        "star": star,
+        "rand": rand,
+        "all": path + cliques + star + rand,
+    }
+    for name, edges in graphs.items():
         stats = {}
         got = labels_of(edges, stats)
-        assert got == set(_union_find_components(edges).items())
+        assert got == set(_union_find_components(edges).items()), name
+        rounds[name] = stats["rounds"]
     # the combined graph contains the 41-node path: diameter 40, but
     # two-phase must stay logarithmic
-    assert stats["rounds"] <= 8
+    assert rounds["all"] <= 8
+    # a star is already a star forest; a clique becomes one in one round
+    assert rounds["star"] == 0 and rounds["cliques"] == 1
+
+    assert labels_of([]) == set()
+
+    # a 10k-leaf hub: one 10k-element adjacency row, no rounds at all
+    stats = {}
+    hub = labels_of([(0, k) for k in range(1, 10_001)], stats)
+    assert stats["rounds"] == 0
+    assert len(hub) == 10_001 and {c for _, c in hub} == {0}
+
+    for seed in range(10):
+        g = random.Random(seed)
+        edges = [(g.randrange(300), g.randrange(300)) for _ in range(200)]
+        edges = [(a, b) for a, b in edges if a != b]
+        assert labels_of(edges) == set(_union_find_components(edges).items()), seed
 
     # label propagation on the bare path exceeds its 20-round budget —
     # it must raise (silently-wrong capped labels were a real bug this
@@ -2056,6 +2117,21 @@ def test_two_phase_cc_matches_union_find_on_adversarial_graphs(spark):
         connected_components(
             spark.createDataFrame(path, "doc_a bigint, doc_b bigint")
         ).collect()
+
+
+def test_two_phase_cc_fails_closed_at_round_cap(spark, monkeypatch):
+    """Hitting the round cap with bad nodes left must raise, not return
+    neighbourhood-min labels of a graph that is not a star forest."""
+    import pytest as _pytest
+
+    from parquet_modular_encryption_spark.pipeline import dedup
+
+    monkeypatch.setattr(dedup, "TWO_PHASE_MAX_ROUNDS", 1)
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a bigint, doc_b bigint"
+    )
+    with _pytest.raises(RuntimeError, match="star forest"):
+        dedup.two_phase_connected_components(path).collect()
 
 
 def test_incremental_dedup_census_invariants(spark, sf_dir):
